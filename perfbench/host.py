@@ -8,12 +8,13 @@ from __future__ import annotations
 
 import os
 import platform
-import subprocess
 import threading
 import time
 
 
-def fingerprint() -> dict:
+def fingerprint(spark) -> dict:
+    """CPU model, nproc, RAM and the Python, PySpark and Java versions;
+    Java's from the running driver JVM, so no process is started."""
     cpu = ""
     with open("/proc/cpuinfo") as fh:
         for line in fh:
@@ -22,14 +23,14 @@ def fingerprint() -> dict:
                 break
     import pyspark
 
-    java = subprocess.run(["java", "-version"], capture_output=True, text=True).stderr
+    prop = spark.sparkContext._jvm.java.lang.System.getProperty
     return {
         "cpu_model": cpu,
         "nproc": os.cpu_count(),
         "ram_mb": ram_mb(),
         "python": platform.python_version(),
         "pyspark": pyspark.__version__,
-        "java": java.splitlines()[0] if java else "",
+        "java": f"{prop('java.vm.name')} {prop('java.runtime.version')}",
     }
 
 

@@ -1,11 +1,11 @@
-"""Seeded inputs for the three benchmark workloads, with their expected
+"""Seeded inputs for the benchmark workloads, with their expected
 outputs computed by construction.
 
 Everything here is plain Python + pyarrow: no Spark, so the inputs (and
 the oracle answers) exist before the engine starts and cost nothing in
 ``setup_s``. The same ``(workload, seed)`` always yields byte-identical
 parquet files; a different seed yields different ones. Generated inputs
-are cached under the work dir, keyed by workload, seed, role and
+are cached under the work dir, keyed by workload, seed, role, sizes and
 ``GEN_VERSION``.
 
 The engine sees only ``pages``, ``seeds``, ``robots`` and
@@ -16,6 +16,7 @@ anchors for the canonicalizer layer timing and the oracle answers.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import random
@@ -28,24 +29,23 @@ import pyarrow.parquet as pq
 from perfbench import oracle
 
 # bump whenever generation changes, so stale caches are never reused
-GEN_VERSION = 6
+GEN_VERSION = 7
 
 # ── workload sizes ───────────────────────────────────────────────────
 # Two inputs per workload, from disjoint seeded namespaces: "warm" feeds
-# the warm-up job (run cold, so counted in setup_s), "main" the measured
-# jobs. Both have the same size, so adaptive execution picks the same
-# plans for both and the warm-up compiles the code the measured jobs run.
+# the warm-up jobs, "main" the measured jobs. Both have the same size,
+# so adaptive execution picks the same plans for both and the warm-up
+# compiles the code the measured jobs run. Sizes are set by the run
+# budget (README.md, "Sizing").
 
-WIDE = dict(n_pages=4_000, n_hosts=48, links=20, seed_frac=0.02, max_depth=2, waves=3)
-DEEP = dict(n_pages=1_000, n_hosts=2, links=5, waves=8)
-CURATE = dict(n_docs=4_000, n_sites=16, paras=7, words=8, pool=64)
-SIZES = {"crawl_wide": WIDE, "crawl_deep": DEEP, "corpus_curate": CURATE}
+WIDE = dict(layer_pages=500, n_hosts=48, links=20, waves=2)
+CURATE = dict(n_docs=1_000, n_sites=16, paras=7, words=8, pool=64)
+SIZES = {"crawl_wide": WIDE, "corpus_curate": CURATE}
 ROLES = ("main", "warm")
 
-# a big budget that never binds (wide crawls) and the deep-narrow budget
+# a host budget that never binds, so every pending URL is crawled
 NEVER_BINDS = 1_000_000
 PAGE_FILES = 8
-DEEP_BUDGET = 1
 
 DENY_RULES = "User-agent: *\nDisallow: /private/\n"
 ALLOW_RULES = "User-agent: *\nDisallow:\n"
@@ -94,49 +94,57 @@ def _href_variants(rng: random.Random, target: str, host: str, same_host: bool):
     return target
 
 
-def gen_site(seed: int, ns: str, n_pages: int, n_hosts: int, links: int,
-             hot_share: float, same_host_share: float, seed_count: int,
-             denied_every: int) -> CrawlSite:
-    """A host-partitioned link graph. Host 0 is hot (``hot_share`` of the
-    pages); every ``denied_every``-th host has a robots-denied
-    ``/private/`` section; 3% of anchors point at pages that do not exist (``/gone``); anchors
-    carry fragments, tracking params and host-relative forms that the
-    frontier canonicalizer must fold back onto the target URL."""
+def gen_site(seed: int, ns: str, layer_pages: int, n_hosts: int, links: int,
+             layers: int) -> CrawlSite:
+    """A layered link graph: ``layers`` layers of ``layer_pages`` pages,
+    layer 0 the seeds. Most anchors of a layer-d page point into layer
+    d + 1, so BFS wave d crawls layer d and every wave has about the same
+    size. The other anchors point back into layers <= d (URLs the
+    frontier has seen, which the bloom prefilter and the anti-join drop)
+    or, 3%, at pages that do not exist (``/gone``, also among the seeds).
+    Host 0 is hot (12% of the pages); every sixth host has a
+    robots-denied ``/private/`` section; anchors carry fragments,
+    tracking params and host-relative forms that the frontier
+    canonicalizer must fold back onto the target URL. The last layer is
+    discovered but never crawled."""
     rng = random.Random(f"{ns}:{seed}")
     hosts = [f"h{k}.{ns}.test" for k in range(n_hosts)]
-    denied = {h for k, h in enumerate(hosts) if k % denied_every == denied_every - 1}
-    urls, url_host = [], []
-    by_host: dict[str, list[str]] = {h: [] for h in hosts}
-    for i in range(n_pages):
-        h = hosts[0] if rng.random() < hot_share else hosts[rng.randrange(1, n_hosts)]
+    denied = {h for k, h in enumerate(hosts) if k % 6 == 5}
+    layer_urls: list[list[str]] = [[] for _ in range(layers)]
+    url_host = {}
+    for i in range(layers * layer_pages):
+        h = hosts[0] if rng.random() < 0.12 else hosts[rng.randrange(1, n_hosts)]
         private = h in denied and rng.random() < 0.25
         u = f"http://{h}/private/p{i}" if private else f"http://{h}/p{i}"
-        urls.append(u)
-        url_host.append(h)
-        by_host[h].append(u)
+        layer_urls[i % layers].append(u)
+        url_host[u] = h
+    n_gone = max(layer_pages // 500, 1)
     pages, hrefs, graph = [], [], {}
-    n_gone = max(n_pages // 400, 1)
-    for u, h in zip(urls, url_host):
-        anchors, targets = [], []
-        for _ in range(links):
-            if rng.random() < 0.03:
-                th = hosts[rng.randrange(n_hosts)]
-                target = f"http://{th}/gone{rng.randrange(n_gone)}"
-                href = target
-            else:
-                same = rng.random() < same_host_share
-                target = rng.choice(by_host[h]) if same else urls[rng.randrange(n_pages)]
-                href = _href_variants(rng, target, h, target.startswith(f"http://{h}/"))
-            anchors.append(href)
-            targets.append(target)
-            hrefs.append((u, href))
-        words = [rng.choice(VOCAB) for _ in range(32)]
-        paras = [" ".join(words[k:k + 8]) for k in range(0, 32, 8)]
-        pages.append((u, _page_html(f"page {u[7:]}", anchors, paras)))
-        graph[u] = list(dict.fromkeys(targets))  # page-level first-wins dedup
-    seeds = sorted(rng.sample(urls, seed_count))
+    for d, us in enumerate(layer_urls):
+        for u in us:
+            h = url_host[u]
+            anchors, targets = [], []
+            for _ in range(links):
+                r = rng.random()
+                if r < 0.03:
+                    th = hosts[rng.randrange(n_hosts)]
+                    href = target = f"http://{th}/gone{rng.randrange(n_gone)}"
+                else:
+                    k = (d + 1 if r < 0.70 and d + 1 < layers
+                         else rng.randrange(d + 1) if r < 0.88 else d)
+                    target = rng.choice(layer_urls[k])
+                    href = _href_variants(rng, target, h, url_host[target] == h)
+                anchors.append(href)
+                targets.append(target)
+                hrefs.append((u, href))
+            words = [rng.choice(VOCAB) for _ in range(32)]
+            paras = [" ".join(words[k:k + 8]) for k in range(0, 32, 8)]
+            pages.append((u, _page_html(f"page {u[7:]}", anchors, paras)))
+            graph[u] = list(dict.fromkeys(targets))  # page-level first-wins dedup
     robots = [(h, DENY_RULES if h in denied else ALLOW_RULES) for h in hosts]
-    return CrawlSite(pages, seeds, robots, hrefs, graph, denied)
+    # a seed list carries dead URLs too: one absent page on every fourth host
+    dead = [f"http://{h}/gone0" for h in hosts[::4]]
+    return CrawlSite(pages, sorted(layer_urls[0] + dead), robots, hrefs, graph, denied)
 
 
 def _status(url: str, site: CrawlSite) -> str:
@@ -147,38 +155,29 @@ def _status(url: str, site: CrawlSite) -> str:
     return "fetched" if url in site.links else "missing"
 
 
-def expected_crawl(site: CrawlSite, max_depth: int, max_waves: int,
-                   budget: int) -> dict[str, tuple[str, int]]:
-    """Independent oracle: replay the level-synchronous crawl over the
-    generated edge list. Each wave takes, per host, the ``budget`` pending
-    URLs first in (depth, url) order; denied and absent pages are
-    attempted but not expanded; a URL's depth is fixed when it is first
-    discovered. With a budget that never binds this is the plain BFS
-    closure up to ``max_depth``. Returns url -> (status, depth)."""
+def expected_crawl(site: CrawlSite, max_depth: int, max_waves: int) -> dict[str, tuple[str, int]]:
+    """Independent oracle: replay the level-synchronous BFS over the
+    generated edge list. With a budget that never binds, wave w attempts
+    every URL first discovered in wave w - 1; denied and absent pages
+    are attempted but not expanded; a URL's depth is fixed when it is
+    first discovered. Returns url -> (status, depth)."""
     depth = {u: 0 for u in site.seeds}
-    pending = set(site.seeds)
+    wave = list(site.seeds)
     out: dict[str, tuple[str, int]] = {}
     for _ in range(max_waves):
-        per_host: dict[str, list[str]] = {}
-        for u in pending:
-            per_host.setdefault(u.split("/", 3)[2], []).append(u)
-        wave = []
-        for us in per_host.values():
-            wave += sorted(us, key=lambda u: (depth[u], u))[:budget]
-        if not wave:
-            break
-        found: dict[str, int] = {}
+        found: list[str] = []
         for u in wave:
-            pending.discard(u)
             st = _status(u, site)
             out[u] = (st, depth[u])
             if st != "fetched" or depth[u] + 1 > max_depth:
                 continue
             for t in site.links[u]:
                 if t not in depth:
-                    found[t] = min(found.get(t, depth[u] + 1), depth[u] + 1)
-        depth.update(found)
-        pending.update(found)
+                    depth[t] = depth[u] + 1
+                    found.append(t)
+        if not found:
+            break
+        wave = found
     return out
 
 
@@ -274,36 +273,24 @@ def _build(d: str, workload: str, seed: int, role: str) -> None:
     ns = role[0] + workload.replace("_", "")
     p = SIZES[workload]
     if workload == "crawl_wide":
-        site = gen_site(seed, ns, p["n_pages"], p["n_hosts"], p["links"], hot_share=0.12,
-                        same_host_share=0.1, denied_every=6,
-                        seed_count=max(1, int(p["n_pages"] * p["seed_frac"])))
-        cfg = {"max_depth": p["max_depth"], "max_waves": p["waves"], "budget": NEVER_BINDS}
-    elif workload == "crawl_deep":
-        site = gen_site(seed, ns, p["n_pages"], p["n_hosts"], p["links"], hot_share=0.5,
-                        same_host_share=0.8, seed_count=0, denied_every=2)
-        # one public root seed per host: a wave carries at most one URL per host
-        site.seeds = sorted(min((u for u in site.links
-                                 if f"//{h}/" in u and "/private/" not in u),
-                                key=lambda u: int(u.rsplit("p", 1)[1]))
-                            for h, _ in site.robots)
-        cfg = {"max_depth": 10_000, "max_waves": p["waves"], "budget": DEEP_BUDGET}
-    else:
-        pages, docs = gen_corpus(seed, ns, p["n_docs"], p["n_sites"], p["paras"],
-                                 p["words"], p["pool"])
-        _write_corpus(d, pages, docs, {"n_docs": p["n_docs"]})
-        if role == "main":  # the DuckDB answer costs seconds; warm-up jobs go unchecked
-            _write(os.path.join(d, "expected.parquet"),
-                   oracle.ccnet_expected(os.path.join(d, "docs.parquet")))
+        site = gen_site(seed, ns, p["layer_pages"], p["n_hosts"], p["links"], p["waves"] + 1)
+        cfg = {"max_depth": p["waves"], "max_waves": p["waves"], "budget": NEVER_BINDS}
+        _write_crawl(d, site, expected_crawl(site, cfg["max_depth"], cfg["max_waves"]), cfg)
         return
-    expected = expected_crawl(site, cfg["max_depth"], cfg["max_waves"], cfg["budget"])
-    _write_crawl(d, site, expected, cfg)
+    pages, docs = gen_corpus(seed, ns, p["n_docs"], p["n_sites"], p["paras"], p["words"],
+                             p["pool"])
+    _write_corpus(d, pages, docs, {"n_docs": p["n_docs"]})
+    if role == "main":  # the DuckDB answer costs seconds; warm-up jobs go unchecked
+        _write(os.path.join(d, "expected.parquet"),
+               oracle.ccnet_expected(os.path.join(d, "docs.parquet")))
 
 
 def ensure_inputs(root: str, workload: str, seed: int, role: str = "main") -> str:
     """Return the cached input dir for (workload, seed, role), generating
     it first if absent. Generation writes to a temp dir and renames it
     into place, so a killed run never leaves a half-written cache."""
-    d = os.path.join(root, f"{workload}-{role}-s{seed}-v{GEN_VERSION}")
+    size = hashlib.sha1(json.dumps(SIZES[workload], sort_keys=True).encode()).hexdigest()[:8]
+    d = os.path.join(root, f"{workload}-{role}-s{seed}-v{GEN_VERSION}-{size}")
     if os.path.exists(d):
         return d
     tmp = d + f".tmp{os.getpid()}"

@@ -14,6 +14,7 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from perfbench import host, oracle
@@ -107,10 +108,11 @@ class Workload:
             self.cfg = json.load(fh)
         self.out = os.path.join(work, "out")
 
-    def run(self) -> Job:
+    def run(self, waves: int | None = None) -> Job:
+        """One job; a crawl stops after ``waves`` waves when given."""
         shutil.rmtree(self.out, ignore_errors=True)
         s0 = host.cpu_ticks()
-        job = self._curate() if self.name == "corpus_curate" else self._crawl()
+        job = self._curate() if self.name == "corpus_curate" else self._crawl(waves)
         s1 = host.cpu_ticks()
         job.steal_ticks, job.cpu_ticks = s1[0] - s0[0], s1[1] - s0[1]
         return job
@@ -123,18 +125,22 @@ class Workload:
         return (r(p("pages")), r(p("seeds.parquet")), r(p("robots.parquet")),
                 r(p("host_budgets.parquet")))
 
-    def crawl_config(self):
+    def crawl_config(self, waves: int | None = None):
         from crawl4ai_spark.frontier.bfs import CrawlConfig
 
-        return CrawlConfig(max_depth=self.cfg["max_depth"], max_waves=self.cfg["max_waves"],
+        return CrawlConfig(max_depth=self.cfg["max_depth"],
+                           max_waves=waves or self.cfg["max_waves"],
                            default_budget=self.cfg["budget"], links_only=True)
 
-    def _crawl(self) -> Job:
+    def _crawl(self, waves: int | None) -> Job:
         from crawl4ai_spark.frontier.bfs import run_crawl
 
         pages, seeds, robots, budgets = self.crawl_inputs()
+        # wave w attempts exactly the URLs at depth w (inputs.gen_site)
+        expected = self.expected if waves is None else self.expected.filter(
+            pc.less(self.expected["depth"], waves))
         t0 = time.time()
-        run_crawl(self.spark, pages, seeds, self.out, self.crawl_config(),
+        run_crawl(self.spark, pages, seeds, self.out, self.crawl_config(waves),
                   robots=robots, host_budgets=budgets)
         wall = time.time() - t0
         commits = [t0] + [m["committed_at"] for m in markers(self.out)]
@@ -145,7 +151,7 @@ class Workload:
             store_bytes=sum(_tree_bytes(os.path.join(self.out, "tables", t))
                             for t in os.listdir(os.path.join(self.out, "tables"))
                             if t not in TIMED_TABLES),
-            error=oracle.check_crawl(results, self.expected),
+            error=oracle.check_crawl(results, expected),
             checked=True,
             steal_ticks=0, cpu_ticks=0,
             wave_walls_s=[b - a for a, b in zip(commits, commits[1:])],

@@ -2,14 +2,22 @@
 
 Three parts, all on the workload's own inputs:
 
-1. Untraced jobs, then the same jobs traced. Tracing wraps the public
-   ``WaveStore`` methods (spans in memory) and reads Spark's status store
-   for the job, stage and task counts and the stage metrics of each
-   traced job. ``trace.overhead_ratio`` is traced / untraced median wall.
+1. Traced jobs. Tracing wraps the public ``WaveStore`` methods (spans in
+   memory) and reads Spark's status store, between jobs, for the job,
+   stage and task counts and the stage metrics of each job.
+   ``trace.overhead_ratio`` is what a traced job costs over what it
+   would cost untraced: its wall plus the status-store reads, over its
+   wall less the spans' wrapper cost (calibrated on a no-op). It is
+   computed from the tracing work itself, so it does not depend on
+   where the job sits on the JVM's warm-up slope.
 2. Layer replays: each layer's public function runs alone over the rows
    the last traced job fed it, into a ``noop`` sink, and is timed. Input
    frames are cached before the clock starts, so only the layer is timed.
 3. Shares: each layer's seconds over the median traced job wall.
+   ``share.store`` is the part of the job wall the store spans cover.
+   Spark is lazy, so a write span also computes the frame it writes
+   (extraction, discovery): ``share.store`` is an upper bound on the
+   store's cost and ``share.bfs.self`` a lower bound on the loop's own.
 
 A layer that the workload does not run reads 0.
 """
@@ -36,24 +44,23 @@ class Spans:
         self.items: list[tuple[str, float, float]] = []
         self._lock = threading.Lock()
 
+    def wrap(self, kind: str, fn):
+        def traced(*a, **kw):
+            t0 = time.time()
+            try:
+                return fn(*a, **kw)
+            finally:
+                with self._lock:
+                    self.items.append((kind, t0, time.time()))
+        return traced
+
     @contextlib.contextmanager
     def installed(self):
         from crawl4ai_spark.frontier.store import WaveStore
 
         originals = {name: getattr(WaveStore, name) for name in STORE_SPANS}
-
-        def wrap(name, fn):
-            def traced(*a, **kw):
-                t0 = time.time()
-                try:
-                    return fn(*a, **kw)
-                finally:
-                    with self._lock:
-                        self.items.append((STORE_SPANS[name], t0, time.time()))
-            return traced
-
         for name, fn in originals.items():
-            setattr(WaveStore, name, wrap(name, fn))
+            setattr(WaveStore, name, self.wrap(STORE_SPANS[name], fn))
         try:
             yield self
         finally:
@@ -62,6 +69,24 @@ class Spans:
 
     def between(self, t0: float, t1: float) -> list[tuple[str, float, float]]:
         return [s for s in self.items if s[1] >= t0 and s[2] <= t1]
+
+
+def wrap_cost_s(n: int = 20_000) -> float:
+    """Seconds a span wrapper adds to one call: a wrapped no-op against
+    the bare no-op, best of three rounds each."""
+    def noop():
+        return None
+
+    def per_call(fn) -> float:
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            for _ in range(n):
+                fn()
+            best = min(best, (time.perf_counter() - t0) / n)
+        return best
+
+    return max(per_call(Spans().wrap("noop", noop)) - per_call(noop), 0.0)
 
 
 def covered(spans) -> float:
@@ -310,69 +335,70 @@ def unit(name: str) -> str:
 
 
 def traced_run(wl, seconds: float, min_jobs: int, session_start_s: float, record: dict):
-    """Untraced then traced jobs (half of ``seconds`` each), then layer
-    replays. Returns (all measured jobs, per-layer metrics)."""
+    """Traced jobs for ``seconds`` (at least ``min_jobs``), then layer
+    replays. Returns (the traced jobs, per-layer metrics)."""
     status = StatusStore(wl.spark)
-    untraced, traced = [], []
-    t_end = time.time() + seconds / 2
-    while len(untraced) < min_jobs or time.time() < t_end:
-        untraced.append(wl.run())
     spans = Spans()
-    per_job = []
+    traced, per_job = [], []
     with spans.installed():
-        t_end = time.time() + seconds / 2
+        t_end = time.time() + seconds
         while len(traced) < min_jobs or time.time() < t_end:
+            q0 = time.time()
             j0, s0 = status.next_ids()
             t0 = time.time()
             job = wl.run()
             t1 = time.time()
             j1, s1 = status.next_ids()
+            totals = status.stage_totals(range(s0, s1))
+            status_s = (t0 - q0) + (time.time() - t1)
             traced.append(job)
-            per_job.append((spans.between(t0, t1), job, j1 - j0, status.stage_totals(range(s0, s1))))
+            per_job.append((spans.between(t0, t1), job, j1 - j0, totals, status_s))
+    span_cost = wrap_cost_s()
 
     m = {name: 0.0 for name in LAYER_METRICS}
     is_crawl = wl.name != "corpus_curate"
     m.update(crawl_layers(wl) if is_crawl else curate_layers(wl))
 
-    n_waves = statistics.median(len(job.wave_walls_s) for _, job, _, _ in per_job)
     med = lambda xs: statistics.median(list(xs))  # noqa: E731
-    wall = med(job.wall_s for _, job, _, _ in per_job)
-    store_s = {k: med(sum(b - a for kind, a, b in sp if kind == k) for sp, _, _, _ in per_job)
+    n_waves = med(len(job.wave_walls_s) for _, job, *_ in per_job)
+    wall = med(job.wall_s for _, job, *_ in per_job)
+    store_s = {k: med(sum(b - a for kind, a, b in sp if kind == k) for sp, *_ in per_job)
                for k in ("write", "commit", "read")}
-    self_s = med(job.wall_s - covered(sp) for sp, job, _, _ in per_job)
-    urls = med(job.attempted for _, job, _, _ in per_job)
+    self_s = med(job.wall_s - covered(sp) for sp, job, *_ in per_job)
+    urls = med(job.attempted for _, job, *_ in per_job)
+    stage = lambda key: med(st[key] for _, _, _, st, _ in per_job)  # noqa: E731
+    per_wave = lambda x: x / n_waves if is_crawl else 0.0  # noqa: E731
     m.update({
         "session.start_s": session_start_s,
-        "bfs.self_s_per_wave": self_s / n_waves if is_crawl else 0.0,
-        "bfs.jobs_per_wave": med(nj for _, _, nj, _ in per_job) / n_waves if is_crawl else 0.0,
-        "bfs.tasks_per_wave": med(st["tasks"] for *_, st in per_job) / n_waves
-        if is_crawl else 0.0,
-        "store.write_s_per_wave": store_s["write"] / n_waves if is_crawl else 0.0,
-        "store.commit_s_per_wave": store_s["commit"] / n_waves if is_crawl else 0.0,
-        "store.read_s_per_wave": store_s["read"] / n_waves if is_crawl else 0.0,
-        "spark.executor_run_s_per_url": med(st["run_ms"] for *_, st in per_job) / 1000 / urls,
-        "spark.shuffle_write_bytes_per_url": med(st["shuffle_write"] for *_, st in per_job) / urls,
-        "spark.spill_bytes": med(st["spill"] for *_, st in per_job),
-        "trace.overhead_ratio": wall / med(j.wall_s for j in untraced),
+        "bfs.self_s_per_wave": per_wave(self_s),
+        "bfs.jobs_per_wave": per_wave(med(nj for _, _, nj, _, _ in per_job)),
+        "bfs.tasks_per_wave": per_wave(stage("tasks")),
+        "store.write_s_per_wave": per_wave(store_s["write"]),
+        "store.commit_s_per_wave": per_wave(store_s["commit"]),
+        "store.read_s_per_wave": per_wave(store_s["read"]),
+        "spark.executor_run_s_per_url": stage("run_ms") / 1000 / urls,
+        "spark.shuffle_write_bytes_per_url": stage("shuffle_write") / urls,
+        "spark.spill_bytes": stage("spill"),
+        "trace.overhead_ratio": med((job.wall_s + q) / (job.wall_s - len(sp) * span_cost)
+                                    for sp, job, _, _, q in per_job),
     })
     files, table_bytes = store_files(wl.out) if is_crawl else (0, {})
-    m["store.files_per_wave"] = files / n_waves if is_crawl else 0.0
+    m["store.files_per_wave"] = per_wave(files)
     for t in STORE_TABLES:
         m[f"store.bytes_per_url.{t}"] = table_bytes.get(t, 0) / urls
-    steal = sum(j.steal_ticks for j in untraced + traced)
-    ticks = sum(j.cpu_ticks for j in untraced + traced)
-    m["host.steal_ratio"] = steal / max(ticks, 1)
+    m["host.steal_ratio"] = (sum(j.steal_ticks for j in traced)
+                             / max(sum(j.cpu_ticks for j in traced), 1))
     for share, names in SHARES.items():
         m[f"share.{share}"] = sum(m[n] for n in names) / wall
     if is_crawl:
-        m["share.store"] = med(covered(sp) for sp, _, _, _ in per_job) / wall
+        m["share.store"] = med(covered(sp) for sp, *_ in per_job) / wall
         m["share.bfs.self"] = self_s / wall
     else:
         m["share.store"] = m["share.bfs.self"] = 0.0
-    record["traced_walls_s"] = [j.wall_s for j in traced]
-    record["untraced_walls_s"] = [j.wall_s for j in untraced]
+    record["tracing"] = {"span_cost_s": span_cost, "spans_per_job": [len(p[0]) for p in per_job],
+                       "status_s": [p[4] for p in per_job]}
     assert sorted(m) == per_layer_names(), set(m) ^ set(per_layer_names())
-    return untraced + traced, {k: {"value": v, "unit": unit(k)} for k, v in sorted(m.items())}
+    return traced, {k: {"value": v, "unit": unit(k)} for k, v in sorted(m.items())}
 
 
 def store_files(store: str) -> tuple[int, dict[str, int]]:
